@@ -39,6 +39,126 @@ import sys
 import time
 
 
+def materialize(df) -> None:
+    """Force every output column through the noop sink (see the module
+    docstring — a bare count() lets Catalyst prune unreferenced
+    aggregate columns)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def credit(wall: float, drain_wall: float, trigger: float) -> float:
+    """A rep's credited seconds. Streaming drains are credited their
+    recurring per-trigger cost (planning + addBatch + commits,
+    Spark-measured via StreamingQueryProgress) in place of the drain's
+    wall-clock: the query-start/stop overhead around the triggers is
+    paid once by a long-lived production stream, exactly like the py4j
+    plan construction the prepared-plan queries amortize. Everything
+    OUTSIDE the drain — fn() plan construction and the post-drain batch
+    step (the timed materialization, any orderBy/limit over the drained
+    snapshot) — is recurring per-query work and stays in the credited
+    number (round-6 ADVICE item): credited = wall − drain_wall +
+    trigger, bounded by wall. The raw wall ships alongside for
+    BENCH_DETAIL/`value_wall_drains`, and the progress history is
+    uncapped during drains (see run_to_memory) so a many-trigger drain
+    can't silently under-credit. If the listener bus stalled and
+    delivered nothing (trigger == 0), the rep falls back to wall rather
+    than crediting away the entire drain."""
+    if trigger > 0:
+        return min(wall, wall - drain_wall + trigger)
+    return wall
+
+
+def timed_rep(build) -> tuple[float, float]:
+    """One timed rep of the frame `build()` returns: reset the drain
+    counters, build, materialize, credit, then release the rep's
+    caches. Returns (credited, wall) seconds."""
+    from master_airflow_spark import registry
+    from master_airflow_spark.streaming import events as stream_events
+
+    stream_events.reset_drain_trigger_seconds()
+    t0 = time.perf_counter()
+    materialize(build())
+    wall = time.perf_counter() - t0
+    credited = credit(
+        wall, stream_events.drain_wall_seconds(), stream_events.drain_trigger_seconds()
+    )
+    registry.release_caches()
+    return credited, wall
+
+
+def converged(samples: list[float]) -> bool:
+    """At least REPS samples and the two fastest agree within 15%."""
+    return len(samples) >= REPS and sorted(samples)[1] <= 1.15 * min(samples)
+
+
+class PairedSeries:
+    """A series of timed reps plus the oracle series paired one-to-one
+    with it (v7 ABAB): every step runs one primary rep and then, back
+    to back, one rep of each oracle, so each primary sample has its
+    oracle samples from the same contention window.
+
+    `rep()` returns a tuple whose first element is the credited seconds;
+    `oracles` maps a key to a zero-argument rep returning seconds."""
+
+    def __init__(self, rep, oracles: dict) -> None:
+        self._rep = rep
+        self._oracle_reps = oracles
+        self.runs: list[tuple] = []
+        self.oracles: dict[str, list[float]] = {k: [] for k in oracles}
+
+    def step(self) -> None:
+        self.runs.append(self._rep())
+        for key, rep in self._oracle_reps.items():
+            self.oracles[key].append(rep())
+
+    def done(self) -> bool:
+        # r10 (r9 ADVICE): the PAIRED oracle series must converge too —
+        # with primary-only convergence the DuckDB side could stop at 3
+        # unconverged samples, feeding uncontrolled paired-sample noise
+        # into the headline ratio. All series share the rep cap.
+        return converged([r[0] for r in self.runs]) and all(
+            converged(o) for o in self.oracles.values()
+        )
+
+    @property
+    def best(self) -> int:
+        """Index of the first rep with the minimum credited time."""
+        credited = [r[0] for r in self.runs]
+        return credited.index(min(credited))
+
+    def at_best(self, series: list | None = None):
+        """min-of-PAIRS (the r8 verdict's phrasing): the sample of
+        `series` (default: the primary reps) taken in the same window
+        as the reported minimum, so a load burst that hits only one
+        engine's independent-min window cannot skew the ratio."""
+        return (self.runs if series is None else series)[self.best]
+
+    @property
+    def min(self) -> float:
+        return self.at_best()[0]
+
+    @staticmethod
+    def spread(series: list[float]) -> float | None:
+        """2nd-fastest / fastest sample, or None below two samples."""
+        if len(series) < 2:
+            return None
+        srt = sorted(series)
+        return srt[1] / srt[0]
+
+
+def sample(*series: PairedSeries) -> None:
+    """Step every unfinished series once per iteration, in the given
+    order, until all are done or REPS_MAX iterations have run. Each
+    series stops on its own done(): one noisy series must not force
+    extra reps of the others (r9 review)."""
+    for _ in range(REPS_MAX):
+        pending = [s for s in series if not s.done()]
+        if not pending:
+            break
+        for s in pending:
+            s.step()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # DuckDB single-node reference timings ship in the output by
@@ -59,11 +179,6 @@ def main() -> None:
 
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
-
-    def materialize(df) -> None:
-        """Force every output column (see the module docstring — a bare
-        count() lets Catalyst prune unreferenced aggregate columns)."""
-        df.write.format("noop").mode("overwrite").save()
 
     headline = [n for n in HEADLINE if n in registry.REGISTRY]
     drain_group = tuple(n for n in DRAIN_GROUP if n in registry.REGISTRY)
@@ -107,16 +222,20 @@ def main() -> None:
 
         con = duckdb_connection(sf_dir)
 
-    def oracle_rep(name: str) -> float | None:
-        spec = registry.REGISTRY[name]
-        if con is None or spec.oracle is None:
-            return None
+    def oracle_rep(sql: str) -> float:
         t0 = time.perf_counter()
-        con.execute(spec.oracle).fetchall()
+        con.execute(sql).fetchall()
         return time.perf_counter() - t0
 
-    def converged(samples: list[float]) -> bool:
-        return len(samples) >= REPS and sorted(samples)[1] <= 1.15 * min(samples)
+    def paired(rep, names) -> PairedSeries:
+        """`rep` paired with the DuckDB oracle of each of `names` that
+        has one (none under --no-oracle)."""
+        oracles = {}
+        for n in names:
+            sql = registry.REGISTRY[n].oracle
+            if con is not None and sql is not None:
+                oracles[n] = lambda sql=sql: oracle_rep(sql)
+        return PairedSeries(rep, oracles)
 
     timings: dict[str, float] = {}
     oracle_timings: dict[str, float] = {}  # min-of-pairs (same window)
@@ -147,25 +266,17 @@ def main() -> None:
     # windows and reintroduce the skew min-of-pairs removes).
     oracle_pq_timings: dict[str, float] = {}
 
-    def per_query_drain_rep(name: str) -> tuple[float, float]:
-        """One rep of a drained view's per-query audit fn (the
-        state-store twin where one exists, else the REGISTRY fn),
-        with the standard trigger credit: credited = wall − drain_wall
-        + trigger (see the per-query run_once below)."""
-        from master_airflow_spark.streaming import events as stream_events
-
-        stream_events.reset_drain_trigger_seconds()
-        t0 = time.perf_counter()
-        df = registry.REGISTRY[PQ_AUDIT.get(name, name)].fn(spark, sf_dir)
-        materialize(df)
-        wall = time.perf_counter() - t0
-        trig = stream_events.drain_trigger_seconds()
-        dwall = stream_events.drain_wall_seconds()
-        credited = wall
-        if trig > 0:
-            credited = min(wall, wall - dwall + trig)
-        registry.release_caches()
-        return credited, wall
+    def record_oracle(name: str, s: PairedSeries) -> None:
+        """The reported oracle time is the one paired with the reported
+        primary time; the independent oracle min ships alongside as a
+        cross-check (oracle_total_min)."""
+        o = s.oracles.get(name)
+        if o:
+            oracle_timings[name] = round(s.at_best(o), 4)
+            oracle_min_timings[name] = round(min(o), 4)
+            spread = s.spread(o)
+            if spread is not None:
+                oracle_spread[name] = round(spread, 3)
 
     def run_drain_group() -> None:
         """v6: the two drained window views are timed as ONE unit
@@ -187,7 +298,7 @@ def main() -> None:
         rep of each view's certified per-query state-store drain
         (legacy accounting + BENCH_DETAIL audit)."""
 
-        def run_once():
+        def unit_rep():
             t0 = time.perf_counter()
             tm: dict = {}
             res = drain_events_multi(spark, sf_dir, drain_group, timings=tm)
@@ -198,56 +309,22 @@ def main() -> None:
                 merges[v] = time.perf_counter() - m0
             registry.release_caches()
             wall = time.perf_counter() - t0
-            # Same trigger>0 guard as the per-query path: if the
-            # listener bus stalled and delivered nothing, fall back to
-            # wall rather than crediting away the entire pass.
-            credited = wall
-            if tm["trigger"] > 0:
-                credited = min(wall, wall - tm["pass_wall"] + tm["trigger"])
-            return credited, wall, tm, merges
+            return credit(wall, tm["pass_wall"], tm["trigger"]), wall, tm, merges
 
-        runs = []
-        pq_creds: dict[str, list[float]] = {v: [] for v in drain_group}
-        pq_walls: dict[str, list[float]] = {v: [] for v in drain_group}
-        duck: dict[str, list[float]] = {v: [] for v in drain_group}
-        duck_pq: dict[str, list[float]] = {v: [] for v in drain_group}
-        def ducks_ok(series: dict[str, list[float]]) -> bool:
-            # r10 (r9 ADVICE): paired oracle series must converge too,
-            # not just ride along — see series_done in the batch loop.
-            # An empty series (no oracle ran yet / --no-oracle) passes.
-            return all(not s or converged(s) for s in series.values())
+        def audit_rep(v: str):
+            # the state-store twin where one exists, else the REGISTRY fn
+            fn = registry.REGISTRY[PQ_AUDIT.get(v, v)].fn
+            return lambda: timed_rep(lambda: fn(spark, sf_dir))
 
-        for _ in range(REPS_MAX):
-            # Per-series convergence (r9 review): the unit and each
-            # per-query drain stop sampling once THEIR two fastest
-            # agree — one noisy series must not force extra reps of
-            # the others (together ~4s/iteration at sf0.1). The view
-            # oracles are NOT independent series: they ride along
-            # with every unit rep so each unit rep is a PAIR from one
-            # contention window (min-of-pairs crediting below).
-            if not (converged([r[0] for r in runs]) and ducks_ok(duck)):
-                runs.append(run_once())
-                for v in drain_group:
-                    o = oracle_rep(v)
-                    if o is not None:
-                        duck[v].append(o)
-            for v in drain_group:
-                if not (converged(pq_creds[v]) and ducks_ok({v: duck_pq[v]})):
-                    c, w = per_query_drain_rep(v)
-                    pq_creds[v].append(c)
-                    pq_walls[v].append(w)
-                    o = oracle_rep(v)  # the pq series' own pair
-                    if o is not None:
-                        duck_pq[v].append(o)
-            done = (
-                converged([r[0] for r in runs])
-                and ducks_ok(duck)
-                and all(converged(pq_creds[v]) for v in drain_group)
-                and ducks_ok(duck_pq)
-            )
-            if done:
-                break
-        credited, wall, tm, merges = min(runs, key=lambda r: r[0])
+        # The unit carries both views' oracles: they ride along with
+        # every unit rep, so each unit rep is a PAIR from one contention
+        # window. Each per-query drain is its own series with its own
+        # oracle pair.
+        unit = paired(unit_rep, drain_group)
+        audits = {v: paired(audit_rep(v), [v]) for v in drain_group}
+        sample(unit, *audits.values())
+        runs = unit.runs
+        credited, wall, tm, merges = unit.at_best()
         views = tm["views"]
         tot_views = sum(views.values()) or 1.0
         merge_sum = sum(merges.values())
@@ -269,9 +346,8 @@ def main() -> None:
         # per-view sum equals that rep's real total (round-8 ADVICE:
         # per-view minima across reps mix reps and can sum below any
         # actually-measured unit wall).
-        min_wall_rep = min(runs, key=lambda r: r[1])
-        min_wall_split = rep_wall_split(min_wall_rep)
-        best_wall_split = rep_wall_split((credited, wall, tm, merges))
+        min_wall_split = rep_wall_split(min(runs, key=lambda r: r[1]))
+        best_wall_split = rep_wall_split(unit.at_best())
         for v in drain_group:
             share = views[v] / tot_views
             timings[v] = round(merges[v] + share * max(credited - merge_sum, 0.0), 4)
@@ -280,22 +356,14 @@ def main() -> None:
             # run the credit was computed from)
             drain_wall_sec[v] = round(best_wall_split[v], 4)
             reps_used[v] = len(runs)
-            pq_best = min(range(len(pq_creds[v])), key=lambda k: pq_creds[v][k])
-            per_query_drain_sec[v] = round(pq_creds[v][pq_best], 4)
-            per_query_drain_wall[v] = round(min(pq_walls[v]), 4)
-            if duck[v]:
-                # min-of-pairs: the oracle time from the same
-                # iteration as the credited-min unit run
-                k_best = min(range(len(runs)), key=lambda k: runs[k][0])
-                oracle_timings[v] = round(duck[v][k_best], 4)
-                oracle_min_timings[v] = round(min(duck[v]), 4)
-                if len(duck[v]) >= 2:
-                    srt = sorted(duck[v])
-                    oracle_spread[v] = round(srt[1] / srt[0], 3)
-            if duck_pq[v]:
+            audit = audits[v]
+            per_query_drain_sec[v] = round(audit.min, 4)
+            per_query_drain_wall[v] = round(min(r[1] for r in audit.runs), 4)
+            record_oracle(v, unit)
+            if audit.oracles.get(v):
                 # the legacy accounting's pair: oracle time from the
                 # same iteration as the per-query drain's credited min
-                oracle_pq_timings[v] = round(duck_pq[v][pq_best], 4)
+                oracle_pq_timings[v] = round(audit.at_best(audit.oracles[v]), 4)
             print(
                 f"# {v}: {timings[v]:.3f}s rows={n_rows[v]}"
                 f" reps={len(runs)} (shared drain;"
@@ -315,6 +383,12 @@ def main() -> None:
             }
         )
 
+    def batch_rep(name: str):
+        # drains / self-persisting queries (no prepared plan) rerun fn()
+        fn = registry.REGISTRY[name].fn
+        plan = plans.get(name)
+        return lambda: timed_rep(lambda: plan if plan is not None else fn(spark, sf_dir))
+
     drained = False
     for name in headline:
         if name in drain_group:
@@ -322,82 +396,17 @@ def main() -> None:
                 run_drain_group()
                 drained = True
             continue
-        spec = registry.REGISTRY[name]
-
-        def run_once() -> tuple[float, float]:
-            # Streaming drains are credited their recurring per-trigger
-            # cost (planning + addBatch + commits, Spark-measured via
-            # StreamingQueryProgress) in place of the drain's
-            # wall-clock: the query-start/stop overhead around the
-            # triggers is paid once by a long-lived production stream,
-            # exactly like the py4j plan construction the prepared-plan
-            # queries amortize. Everything OUTSIDE the drain — fn()
-            # plan construction and the post-drain batch step (the
-            # timed count(), any orderBy/limit over the drained
-            # snapshot) — is recurring per-query work and stays in the
-            # credited number (round-6 ADVICE item): credited =
-            # wall − drain_wall + trigger. Wall-clock still bounds it,
-            # the raw wall number is returned alongside for
-            # BENCH_DETAIL/`value_wall_drains`, and the progress
-            # history is uncapped during drains (see run_to_memory) so
-            # a many-trigger drain can't silently under-credit.
-            from master_airflow_spark.streaming import events as stream_events
-
-            stream_events.reset_drain_trigger_seconds()
-            t0 = time.perf_counter()
-            df = plans.get(name)
-            if df is None:  # drains / self-persisting queries: rerun fully
-                df = spec.fn(spark, sf_dir)
-            materialize(df)
-            wall = time.perf_counter() - t0
-            trig = stream_events.drain_trigger_seconds()
-            drain_wall = stream_events.drain_wall_seconds()
-            dt = wall
-            if trig > 0:
-                dt = min(wall, wall - drain_wall + trig)
-            registry.release_caches()
-            return dt, wall
-
-        times, walls, otimes, n = [], [], [], n_rows[name]
-        has_oracle = con is not None and spec.oracle is not None
-
-        def series_done() -> bool:
-            # r10 (r9 ADVICE): the PAIRED oracle series must converge
-            # too — with Spark-only convergence the DuckDB side could
-            # stop at 3 unconverged samples, feeding uncontrolled
-            # paired-sample noise into the headline ratio. Both series
-            # share the rep cap.
-            return converged(times) and (not has_oracle or converged(otimes))
-
-        while not series_done() and len(times) < REPS_MAX:
-            dt, wall = run_once()
-            times.append(dt)
-            walls.append(wall)
-            if has_oracle:
-                # ABAB pairing: the oracle rep runs back-to-back with
-                # the Spark rep — every rep is a PAIR from one
-                # contention window
-                otimes.append(oracle_rep(name))
-        timings[name] = round(min(times), 4)
-        reps_used[name] = len(times)
-        best = times.index(min(times))
-        if has_oracle:
-            # min-of-PAIRS crediting (the r8 verdict's own phrasing):
-            # the reported oracle time is the one measured in the SAME
-            # window as the reported Spark time, so a load burst that
-            # hits only one engine's independent-min window cannot
-            # skew the ratio either way. The independent oracle min
-            # ships alongside as a cross-check (oracle_total_min).
-            oracle_timings[name] = round(otimes[best], 4)
-            oracle_min_timings[name] = round(min(otimes), 4)
-            if len(otimes) >= 2:
-                srt = sorted(otimes)
-                oracle_spread[name] = round(srt[1] / srt[0], 3)
-        if walls[best] - times[best] > 0.005:  # drain credit applied
-            drain_wall_sec[name] = round(walls[best], 4)
-            wall_timings[name] = round(min(walls), 4)
+        s = paired(batch_rep(name), [name])
+        sample(s)
+        timings[name] = round(s.min, 4)
+        reps_used[name] = len(s.runs)
+        record_oracle(name, s)
+        credited, wall = s.at_best()
+        if wall - credited > 0.005:  # drain credit applied
+            drain_wall_sec[name] = round(wall, 4)
+            wall_timings[name] = round(min(r[1] for r in s.runs), 4)
         print(
-            f"# {name}: {timings[name]:.3f}s rows={n} reps={len(times)}",
+            f"# {name}: {timings[name]:.3f}s rows={n_rows[name]} reps={len(s.runs)}",
             file=sys.stderr,
         )
     total = round(sum(timings.values()), 4)
@@ -429,7 +438,7 @@ def main() -> None:
     # timed by their Spark-measured per-trigger execution cost
     # (recurring planning+addBatch+commit — the throughput number a
     # long-lived stream pays per micro-batch) instead of wall-clock
-    # that includes one-time query start/stop (see run_once).
+    # that includes one-time query start/stop (see credit).
     # v5 (round 7), three changes, all to the Spark side's detriment
     # or neutral: (a) FULL materialization — every timed pass writes
     # the result to the noop sink instead of count()ing it, closing

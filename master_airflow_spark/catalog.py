@@ -41,12 +41,17 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     """Driver-side (os.stat, no Spark job) identity of a parquet table
-    at ``path`` — a single file or a directory of part files — as
-    sorted (name, mtime_ns, size, ino) tuples. Empty list if the path
-    is missing. The ONE walker behind every cheap table fingerprint in
-    the repo (near-dup probe cache invalidation, size-adaptive state
-    partitioning, scale-probe staging markers), so a future change —
-    nested partition dirs, atomicity markers — lands once.
+    at ``path`` — a single file or a directory of part files, nested
+    partition directories included (Hive layout, key=value/part-*) —
+    as (name, mtime_ns, size, ino) tuples sorted by name, where a
+    part's name is its path relative to ``path``. Directories Spark
+    never reads (``_temporary``, ``.spark-staging`` and every other
+    ``_``/``.`` prefix) are skipped. Empty list if the path is missing.
+    The ONE walker behind every cheap table fingerprint in the repo
+    (near-dup probe cache invalidation, size-adaptive state
+    partitioning, scale-probe staging markers), the size gates
+    (table_bytes) and the footer-schema probe (_nanos_timestamp_cols),
+    so a future change lands once.
 
     st_ino is folded in (round-11 ADVICE) so a corpus replaced by a
     timestamp-preserving copy (cp -p / rsync -t, same names and sizes)
@@ -57,11 +62,15 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     try:
         if os.path.isdir(path):
             out = []
-            for name in sorted(os.listdir(path)):
-                if name.endswith(".parquet"):
-                    st = os.stat(os.path.join(path, name))
-                    out.append((name, st.st_mtime_ns, st.st_size, st.st_ino))
-            return out
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                for f in files:
+                    if f.endswith(".parquet"):
+                        part = os.path.join(root, f)
+                        st = os.stat(part)
+                        rel = os.path.relpath(part, path)
+                        out.append((rel, st.st_mtime_ns, st.st_size, st.st_ino))
+            return sorted(out)
         st = os.stat(path)
         return [(os.path.basename(path), st.st_mtime_ns, st.st_size, st.st_ino)]
     except OSError:
@@ -107,15 +116,10 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     a directory of part files (the production layout Spark writes) —
     every part shares the footer schema, so the first one answers."""
     if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(r, f)
-            for r, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        parts = parquet_part_stats(path)
         if not parts:
             return []
-        path = parts[0]
+        path = os.path.join(path, parts[0][0])
     schema = pq.read_schema(path)
     return [
         f.name

@@ -40,10 +40,13 @@ _FACT_BROADCAST_ORDERS_BYTES = 64 << 20
 
 # q18 mid-scale band (r16): broadcast-hint the HAVING-filtered order
 # aggregate — whose ~1.5% selectivity Catalyst/AQE cannot see — only
-# while orders sits between "Catalyst broadcasts the orders side
-# itself" (below) and "the aggregate's WORST-case cardinality is no
-# longer a safe broadcast relation" (above). See q18's docstring for
-# the sf0.1/x50 measurements behind both edges.
+# while MIN <= orders bytes < MAX, i.e. in [16 MB, 256 MB): above the
+# 10 MB autoBroadcastJoinThreshold under which Catalyst broadcasts the
+# orders side itself, and below the size where the aggregate's
+# WORST-case cardinality is no longer a safe broadcast relation. In
+# the 10-16 MB sub-band neither broadcast fires and the exchange plan
+# stays, on purpose. See q18's docstring for the sf0.1/x50
+# measurements behind both edges.
 _Q18_AGG_BROADCAST_MIN_ORDERS = 16 << 20
 _Q18_AGG_BROADCAST_MAX_ORDERS = 256 << 20
 
@@ -627,15 +630,17 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     of orders (aggregate+filter defeats size estimation, and AQE's
     runtime stats measure the agg exchange's INPUT, pre-final-agg/
     filter), so past the orders auto-broadcast size both fact sides
-    shuffle. Inside the [16 MB, 256 MB] orders-bytes band the filtered
-    aggregate gets an explicit broadcast hint instead: orders never
-    shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%, plan SMJ +
-    orders Exchange → BHJ with the agg as build). The band is bounded
-    both ways, measured at sf0.1 and x50:
-    - below 16 MB Catalyst broadcasts the orders side itself and the
-      hint would SERIALIZE the heavy agg into a broadcast build
-      (sf0.1 interleaved A/B: 0.662 → 0.746 s med, hint lost 8/8
-      pairs — so the bench plan keeps the current shape);
+    shuffle. Inside the half-open [16 MB, 256 MB) orders-bytes band
+    the filtered aggregate gets an explicit broadcast hint instead:
+    orders never shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%,
+    plan SMJ + orders Exchange → BHJ with the agg as build). The band
+    is bounded both ways, measured at sf0.1 and x50:
+    - below the 10 MB autoBroadcastJoinThreshold Catalyst broadcasts
+      the orders side itself and the hint would SERIALIZE the heavy
+      agg into a broadcast build (sf0.1 interleaved A/B: 0.662 →
+      0.746 s med, hint lost 8/8 pairs — so the bench plan keeps the
+      current shape); in the 10-16 MB sub-band neither broadcast
+      fires and the exchange plan (the r15 shape) stays on purpose;
     - above 256 MB the qualifying set's WORST case (a non-selective
       dataset where every order qualifies) could exceed a safe
       broadcast relation, so the exchange plan returns — at 100 TB

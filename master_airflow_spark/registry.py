@@ -57,82 +57,78 @@ def register(
 
 # Exposure order for the driver contract. The driver samples the
 # FIRST 50 registry entries each round, so ordering is the lever that
-# decides which queries get externally certified. Round-16 policy
-# (the round-15 verdict's #7 item — continue the stamp rotation):
-# (1) slots 1-31: every query whose freshest driver stamp is r11 —
-#     the full r11 remainder (the verdict's 27-query
-#     ngram_jaccard_pairs .. zorder_layout_keys span plus the four
-#     other r11-stamped names that had not re-entered a window:
-#     approx_distinct_users, approx_percentiles, and the two
-#     alphabetically-early stragglers), name order. After this window
-#     the oldest stamp anywhere in the registry is r12.
-# (2) slots 32-33: queries whose CODE changed this round —
-#     q18_large_orders (the X36 bloom-prune wired into its
-#     large-orders semi-join, gated on input size) and
-#     jaccard_block_pairs (round-15 verdict #6 candidate-volume
-#     pass).
-# (3) remaining 17 slots: the oldest r12 stamps, name order
-#     (apply_in_pandas_scale .. event_transition_matrix); the r12
-#     remainder (events_rollup_grids .. top_customers_per_segment,
-#     32 queries) rotates in r17.
+# decides which queries get externally certified. Policy: oldest
+# freshest stamp first (the freshest stamp of a query is the latest
+# CORRECTNESS_rNN.json that lists it), ties in name order.
+# (1) slot 1: video_frame_sample, last certified at r9 — the oldest
+#     stamp in the registry.
+# (2) slots 2-33: the r12 remainder (events_rollup_grids ..
+#     top_customers_per_segment, 32 queries), name order.
+# (3) slots 34-50: the 17 oldest r13 stamps, name order
+#     (cluster_keep_longest .. pricing_summary). After this window the
+#     oldest stamp anywhere in the registry is r13.
+# The previous window's changed-code slots held q18_large_orders (its
+# band-gated broadcast of the HAVING-filtered aggregate; the X36 bloom
+# was measured for that join and rejected) and jaccard_block_pairs
+# (its code did not change). Both certified green in
+# CORRECTNESS_r16.
 # Changed-code note (round-9 verdict protocol): queries whose code is
-# touched this round but NOT in the window are re-verified via
-# testing.run_one in the touching session; OPTIMIZATION_r16.md
-# records the per-query re-certifications.
+# touched but NOT in the window are re-verified via testing.run_one in
+# the touching session.
 PRIORITY: tuple[str, ...] = (
-    # (1) the 31 r11-stamped queries, name order.
-    "approx_distinct_users",
-    "approx_percentiles",
-    "ngram_jaccard_pairs",
-    "normalize_whitespace",
-    "orders_in_trailing_30d",
-    "pandas_udaf_median",
-    "pandas_udf_scalar",
-    "percentiles_exact",
-    "png_decode_stats",
-    "quality_logit_score",
-    "rank_orders_window",
-    "running_totals",
-    "scalar_subquery_above_avg",
-    "scd2_history_build",
-    "sessionize_events",
-    "stream_dedup_watermark",
-    "stream_ewma_per_user",
-    "stream_interval_join",
-    "stream_sliding_agg",
-    "stream_static_enrich",
-    "stream_topk_users",
-    "stream_tumbling_agg",
-    "stream_unique_users_rollup",
-    "text_quality",
-    "text_stats",
-    "token_count_bpe",
-    "top_bigram_repetition",
-    "training_corpus_pipeline",
-    "triangle_count_cosuppliers",
-    "unpivot_lineitem_measures",
-    "zorder_layout_keys",
-    # (2) queries whose code changed this round.
-    "q18_large_orders",
-    "jaccard_block_pairs",
-    # (3) the 17 oldest-r12 stamps, name order.
-    "apply_in_pandas_scale",
-    "array_hof_suite",
-    "asof_join_tolerance",
-    "bm25_lite_ranking",
-    "cohort_retention",
-    "containment_pairs",
-    "corr_qty_price",
-    "correlated_scalar_select",
-    "cosine_topk",
-    "csv_parse_roundtrip",
-    "cube_priority_status",
-    "dataset_mix_sample",
-    "dedup_exact",
-    "embedding_normalize",
-    "embedding_quantize",
-    "event_rate_anomalies",
-    "event_transition_matrix",
+    # (1) the oldest stamp, r9.
+    "video_frame_sample",
+    # (2) the 32 r12-stamped queries, name order.
+    "events_rollup_grids",
+    "exact_quantiles_sketched",
+    "funnel_conversion",
+    "fuzzy_customer_pairs",
+    "in_subquery_parts",
+    "incremental_corpus_dedup",
+    "incremental_rollup_merge",
+    "interpolate_sparse_series",
+    "lateral_join_agg",
+    "listagg_nation_customers",
+    "math_conditional",
+    "minhash_near_dup",
+    "multimodal_features",
+    "multiset_set_ops",
+    "null_semantics",
+    "pivot_priority_by_status",
+    "ppm_decode_resize",
+    "price_histogram",
+    "q21_waiting_suppliers",
+    "range_join_price_bands",
+    "ratio_to_report",
+    "recursive_cte_hierarchy",
+    "repeated_shingle_ratio",
+    "rolling_hash_fingerprint",
+    "rollup_sales",
+    "salted_hot_key_agg",
+    "scd2_purchase_history",
+    "term_frequencies",
+    "tfidf_top_terms",
+    "top1_price_alltime",
+    "top1_price_today",
+    "top_customers_per_segment",
+    # (3) the 17 oldest-r13 stamps, name order.
+    "cluster_keep_longest",
+    "composite_key",
+    "corrupt_record_quarantine",
+    "customer_order_counts",
+    "daily_event_type_pivot",
+    "date_functions",
+    "date_parse_roundtrip",
+    "dedup_clusters",
+    "dedup_rate_by_source",
+    "distinct_order_status",
+    "dq_checks",
+    "embedding_covariance",
+    "embedding_near_dup",
+    "equi_depth_price_buckets",
+    "event_type_association",
+    "keyed_upsert_latest",
+    "pricing_summary",
 )
 
 

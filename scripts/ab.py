@@ -1,16 +1,15 @@
 """Within-session interleaved A/B of a runtime-settable SQL conf over
 selected registered queries. Each rep: set conf to A, run, set to B,
-run — paired samples from the same contention window, min-of-pairs
+run — paired samples from the same contention window; min and median
 reported both ways.
 
-Run: python scripts/r15_ab_conf.py <conf> <valA> <valB> <reps> <q1> [q2 ...]
+Run: python scripts/ab.py <conf> <valA> <valB> <reps> <q1> [q2 ...]
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, ".")
 
@@ -23,20 +22,15 @@ def main() -> int:
     from master_airflow_spark import registry
     from master_airflow_spark.session import get_spark
 
-    spark = get_spark(app_name="mas-r15-ab")
+    import bench
+
+    spark = get_spark(app_name="mas-ab")
     spark.sparkContext.setLogLevel("ERROR")
     registry._ensure_loaded()
 
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
     def run(name: str) -> float:
-        t0 = time.perf_counter()
-        df = registry.REGISTRY[name].fn(spark, sf_dir)
-        materialize(df)
-        dt = time.perf_counter() - t0
-        registry.release_caches()
-        return dt
+        """Wall seconds of one fresh build + materialization."""
+        return bench.timed_rep(lambda: registry.REGISTRY[name].fn(spark, sf_dir))[1]
 
     for name in names:
         # warm both configs once

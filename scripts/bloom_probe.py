@@ -33,6 +33,8 @@ sys.path.insert(0, "scripts")
 
 from scale_probe import FACTORS, build_scale, _global_key_shift  # noqa: E402
 
+import bench  # noqa: E402
+
 from master_airflow_spark import registry  # noqa: E402
 from master_airflow_spark.catalog import TABLES, load_table  # noqa: E402
 from master_airflow_spark.operators.bloom_prune import (  # noqa: E402
@@ -71,7 +73,7 @@ def run_measured(spark, build_frame, sf_dir: str, use_bloom: bool):
         # Full materialization via the noop sink, matching bench v5 /
         # scale_probe: count() would let Catalyst prune output columns
         # and understate the shipped plan's shuffle bytes.
-        df.write.format("noop").mode("overwrite").save()
+        bench.materialize(df)
         dt = time.perf_counter() - t0
     finally:
         sc.setJobGroup("", "")

@@ -28,12 +28,14 @@ Run AFTER the x-replicas exist (scripts/scale_probe.py builds them):
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 import time
 
 sys.path.insert(0, ".")
 
+import bench  # noqa: E402
 from master_airflow_spark import registry  # noqa: E402
 from master_airflow_spark.session import get_spark  # noqa: E402
 
@@ -142,25 +144,6 @@ def _stage_single_file(spark, k: int) -> str:
     return dst
 
 
-def drain_rep(spark, name: str, sf_dir: str) -> tuple[float, float]:
-    """One rep of the certified per-query state-store drain — same
-    credited accounting as bench.py's per_query_drain_rep."""
-    from master_airflow_spark.streaming import events as stream_events
-
-    stream_events.reset_drain_trigger_seconds()
-    t0 = time.perf_counter()
-    df = registry.REGISTRY[name].fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    trig = stream_events.drain_trigger_seconds()
-    dwall = stream_events.drain_wall_seconds()
-    credited = wall
-    if trig > 0:
-        credited = min(wall, wall - dwall + trig)
-    registry.release_caches()
-    return credited, wall
-
-
 def main() -> None:
     spark = get_spark(app_name="mas-drain-scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -206,9 +189,12 @@ def main() -> None:
                         spark.conf.set(
                             "spark.sql.streaming.stateStore.providerClass", provider
                         )
+                    # the certified per-query drain, credited like
+                    # every bench.py rep: (credited, wall) per rep
+                    build = functools.partial(spec.fn, spark, sf_dir)
                     try:
-                        drain_rep(spark, name, sf_dir)  # warm
-                        reps = [drain_rep(spark, name, sf_dir) for _ in range(3)]
+                        bench.timed_rep(build)  # warm
+                        reps = [bench.timed_rep(build) for _ in range(3)]
                     finally:
                         if provider is not None:
                             spark.conf.unset(

@@ -1,10 +1,11 @@
-"""Round-16 plan capture: dump .explain("formatted") for every
-headline query (plus any extra names passed on argv) into
-plans/r16/<query>_<suffix>.txt, and print a one-line plan-shape
+"""Plan capture: dump .explain("formatted") for the named queries
+(default: every registered bench.HEADLINE query) into
+plans/<label>/<query>_<suffix>.txt, and print a one-line plan-shape
 summary (Exchange count, join kinds, Python-eval nodes) per query.
 
-Run: python scripts/r16_plans.py before [extra_query ...]
-     python scripts/r16_plans.py after  [extra_query ...]
+Run: python scripts/plans.py <label> <suffix> [query ...]
+e.g. python scripts/plans.py r16 before
+     python scripts/plans.py r16 after q18_large_orders
 """
 
 from __future__ import annotations
@@ -17,8 +18,10 @@ sys.path.insert(0, ".")
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    extra = sys.argv[2:]
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    label, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from master_airflow_spark import registry
@@ -27,19 +30,14 @@ def main() -> int:
 
     import bench
 
-    spark = get_spark(app_name="mas-r16-plans")
+    spark = get_spark(app_name=f"mas-plans-{label}")
     spark.sparkContext.setLogLevel("ERROR")
     registry._ensure_loaded()
 
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", label)
     os.makedirs(out_dir, exist_ok=True)
 
-    names = [n for n in bench.HEADLINE if n in registry.REGISTRY]
-    for n in extra:
-        if n not in names:
-            names.append(n)
-
-    for name in names:
+    for name in names or [n for n in bench.HEADLINE if n in registry.REGISTRY]:
         try:
             df = registry.REGISTRY[name].fn(spark, sf_dir)
             plan = formatted(df)

@@ -37,8 +37,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     registry._ensure_loaded()
 
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
+    import bench
 
     # warm: full pass incl. table counts like bench
     from master_airflow_spark.catalog import TABLES, load_table
@@ -46,22 +45,18 @@ def main() -> int:
     for t in TABLES:
         load_table(spark, sf_dir, t).count()
     df = registry.REGISTRY[name].fn(spark, sf_dir)
-    materialize(df)
+    bench.materialize(df)
     registry.release_caches()
-    if name not in getattr(__import__("bench"), "REBUILD", set()):
-        plan = df
-    else:
-        plan = None
+    plan = None if name in bench.REBUILD else df
 
     spark.sparkContext.setJobDescription(f"PROFILE:{name}")
-    walls = []
     t_mark = time.time() * 1000
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        d = plan if plan is not None else registry.REGISTRY[name].fn(spark, sf_dir)
-        materialize(d)
-        walls.append(time.perf_counter() - t0)
-        registry.release_caches()
+    walls = [
+        bench.timed_rep(
+            lambda: plan if plan is not None else registry.REGISTRY[name].fn(spark, sf_dir)
+        )[1]
+        for _ in range(reps)
+    ]
     print(f"{name}: walls={[round(w,3) for w in walls]} min={min(walls):.3f}")
     app_id = spark.sparkContext.applicationId
     spark.stop()

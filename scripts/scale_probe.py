@@ -32,15 +32,15 @@ embeddings/events replicate with shifted keys.
 
 from __future__ import annotations
 
+import functools
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from master_airflow_spark import registry  # noqa: E402
 from master_airflow_spark.catalog import TABLES, load_table  # noqa: E402
 from master_airflow_spark.session import get_spark  # noqa: E402
@@ -211,15 +211,6 @@ def build_scale(spark, k: int, shift: int) -> str:
     return dst
 
 
-def _materialize(df) -> None:
-    """Force FULL materialization of every output column via the noop
-    sink. A bare count() lets Catalyst prune unreferenced aggregate
-    expressions and the operators that feed only them (e.g.
-    dup_span_cut's window + in-agg text reassembly vanish entirely),
-    which would silently time a lighter plan than the query ships."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     spark = get_spark(app_name="mas-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -236,16 +227,15 @@ def main() -> None:
             load_table(spark, sf_dir, t).count()
         for q in probe_queries:
             spec = registry.REGISTRY[q]
-            df = spec.fn(spark, sf_dir)
-            _materialize(df)  # warm (codegen cache, broadcast build)
-            registry.release_caches()
-            samples = []
-            for _ in range(3):  # median of 3: GC outliers hit ~1 run in 10
-                t0 = time.perf_counter()
-                df2 = spec.fn(spark, sf_dir)
-                _materialize(df2)
-                samples.append(time.perf_counter() - t0)
-                registry.release_caches()
+            # Full materialization via the noop sink (bench.materialize):
+            # a bare count() lets Catalyst prune unreferenced aggregate
+            # expressions and the operators that feed only them (e.g.
+            # dup_span_cut's window + in-agg text reassembly vanish
+            # entirely), which would silently time a lighter plan.
+            build = functools.partial(spec.fn, spark, sf_dir)
+            bench.timed_rep(build)  # warm (codegen cache, broadcast build)
+            # median of 3 wall times: GC outliers hit ~1 run in 10
+            samples = [bench.timed_rep(build)[1] for _ in range(3)]
             dt = sorted(samples)[1]
             results[q][k] = round(dt, 3)
             print(f"x{k} {q}: {dt:.3f}s {['%.2f' % s for s in samples]}", file=sys.stderr)

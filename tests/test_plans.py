@@ -694,25 +694,36 @@ def test_q18_band_gated_agg_broadcast(spark, sf_dir, monkeypatch):
     ~1.5% selectivity is invisible to Catalyst/AQE size estimation),
     so orders never shuffles; outside the band the hint must be
     absent — below it Catalyst broadcasts the orders side itself, and
-    at 100 TB the aggregate's worst case is not a safe broadcast."""
+    at 100 TB the aggregate's worst case is not a safe broadcast.
+    Auto-broadcast is off for both plans, so at the test SF only the
+    hint can put a BroadcastExchange in the plan: the pin fails if the
+    hint is removed."""
+    import re
+
     import master_airflow_spark.operators.tpch_like as t
 
     def plan_at(orders_bytes):
         monkeypatch.setattr(t, "table_bytes", lambda d, n: orders_bytes)
-        return formatted(_q(spark, sf_dir, "q18_large_orders"))
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return formatted(_q(spark, sf_dir, "q18_large_orders"))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     mid = plan_at(64 << 20)
+    tree = mid.split("\n\n")[0]
     # build side is the aggregate: a BroadcastExchange directly over
-    # the HashAggregate/Filter subtree, and no orders-key shuffle
+    # the HAVING Filter / final HashAggregate, and no orders-key shuffle
+    assert re.search(
+        r"BroadcastExchange \(\d+\)\n[ :|]*\+- Filter \(\d+\)\n"
+        r"[ :|]*\+- HashAggregate \(\d+\)",
+        tree,
+    ), mid
     assert "hashpartitioning(o_orderkey" not in mid, mid
-    assert "BroadcastExchange" in mid, mid
 
-    # past the band: the agg is NOT hinted; with auto-broadcast off the
-    # orders join plans its shuffle again (the 100 TB shape)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        big = plan_at(1 << 40)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # past the band: the agg is NOT hinted and the orders join plans its
+    # shuffle again (the 100 TB shape)
+    big = plan_at(1 << 40)
+    assert "BroadcastExchange" not in big, big
     assert "hashpartitioning(o_orderkey" in big, big
