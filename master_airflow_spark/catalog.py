@@ -2,9 +2,12 @@
 
 The reference declares its schema implicitly per sink (SURVEY.md §1.2);
 here the parquet footer is the single schema authority and tables are
-exposed uniformly as DataFrames / temp views. Reads are plain
-``spark.read.parquet`` so Catalyst gets predicate pushdown, column
-pruning, and (on partitioned layouts) partition pruning for free.
+exposed uniformly as DataFrames / temp views. Reads go through
+``read_parquet``: the footer schema is inferred once per file identity
+(an inference is a Spark job) and later reads pass it to
+``spark.read.schema(...).parquet``, which launches none. Catalyst
+still gets predicate pushdown, column pruning, and (on partitioned
+layouts) partition pruning for free.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -49,9 +53,9 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     ``_``/``.`` prefix) are skipped. Empty list if the path is missing.
     The ONE walker behind every cheap table fingerprint in the repo
     (near-dup probe cache invalidation, size-adaptive state
-    partitioning, scale-probe staging markers), the size gates
-    (table_bytes) and the footer-schema probe (_nanos_timestamp_cols),
-    so a future change lands once.
+    partitioning, scale-probe staging markers, the read_parquet schema
+    cache), the size gates (table_bytes) and the footer-schema probe
+    (_nanos_timestamp_cols), so a future change lands once.
 
     st_ino is folded in (round-11 ADVICE) so a corpus replaced by a
     timestamp-preserving copy (cp -p / rsync -t, same names and sizes)
@@ -128,13 +132,64 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     ]
 
 
+# path -> (SparkContext applicationId, parquet_part_stats identity,
+# inferred schema, _nanos_timestamp_cols answer). One entry per path,
+# replaced whole (a plain dict store, safe across the threads that
+# build queries concurrently); two concurrent misses both infer.
+_SCHEMA_CACHE: dict[str, tuple[str, tuple, StructType, list[str]]] = {}
+
+
+def _schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, list[str], DataFrame | None]:
+    """The parquet schema of ``path``, its TIMESTAMP(NANOS) column
+    names, and on a miss the read that inferred them (None on a hit).
+
+    A hit needs the same application and the same file identity, so a
+    rewritten table or a new session infers again. An unknown identity
+    (missing or non-local path: parquet_part_stats returns []) caches
+    nothing and infers as a plain read does, raising the same
+    AnalysisException on a missing path."""
+    ident = tuple(parquet_part_stats(path))
+    app = spark.sparkContext.applicationId
+    hit = _SCHEMA_CACHE.get(path)
+    if ident and hit and hit[0] == app and hit[1] == ident:
+        return hit[2], hit[3], None
+    if not ident:
+        _SCHEMA_CACHE.pop(path, None)
+    df = spark.read.parquet(path)
+    schema, ns_cols = df.schema, _nanos_timestamp_cols(path)
+    if ident:
+        _SCHEMA_CACHE[path] = (app, ident, schema, ns_cols)
+    return schema, ns_cols, df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """``read_parquet(spark, path).schema``, building no DataFrame when
+    the schema is cached."""
+    return _schema(spark, path)[0]
+
+
+def _read(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    schema, ns_cols, df = _schema(spark, path)
+    if df is None:
+        df = spark.read.schema(schema).parquet(path)
+    return df, ns_cols
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark
+    job) only on the first read of a file identity. Every call returns
+    a fresh DataFrame: two reads of one table get distinct attribute
+    ids, so self-joins (q7/q8 join nation to itself) stay resolvable."""
+    return _read(spark, path)[0]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_defaults(spark)
-    path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    ns_cols = _nanos_timestamp_cols(path)
+    df, ns_cols = _read(spark, table_path(sf_dir, name))
     if ns_cols and dict(df.dtypes).get(ns_cols[0]) == "bigint":
         # Legacy nanosAsLong read: integer ns→µs floor (`div`, not `/`:
         # ns values exceed double's 2^53 integer range), matching

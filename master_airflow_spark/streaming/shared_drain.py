@@ -83,6 +83,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from master_airflow_spark.functions.exact import cents, lsum_money, lsum_scaled
 
@@ -255,6 +256,16 @@ VIEWS: dict[str, tuple] = {
     "stream_session_window": (_session_partial, _merge_sessions, _project_sessions),
 }
 
+
+def _spool_schema(partial: DataFrame) -> StructType:
+    """The schema a spool of ``partial`` reads back with (parquet
+    reads every column nullable), so the merge reads the spool with
+    ``spark.read.schema`` instead of an inference job."""
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in partial.schema]
+    )
+
+
 # Output schemas, for the zero-batch (empty landing dir) case: no
 # trigger ever fires, so no spool exists to read — return empty
 # frames of the right shape instead of an AnalysisException.
@@ -321,6 +332,7 @@ def drain_events_multi(
     spools = {v: os.path.join(root, "spool", v) for v in view_names}
     ckpt = os.path.join(root, "ckpt")
     view_sec: dict[str, float] = dict.fromkeys(view_names, 0.0)
+    spool_schemas: dict[str, StructType] = {}
 
     n_batches = [0]
 
@@ -359,7 +371,9 @@ def drain_events_multi(
 
         def write_view(v: str) -> None:
             t0 = time.perf_counter()
-            VIEWS[v][0](batch_df).write.mode("append").parquet(spools[v])
+            part = VIEWS[v][0](batch_df)
+            part.write.mode("append").parquet(spools[v])
+            spool_schemas[v] = _spool_schema(part)
             view_sec[v] += time.perf_counter() - t0
 
         with ThreadPoolExecutor(len(view_names)) as ex:
@@ -449,7 +463,9 @@ def drain_events_multi(
     else:
         merge_ix = 2 if n_batches[0] == 1 else 1
         out = {
-            v: VIEWS[v][merge_ix](spark.read.parquet(spools[v]))
+            v: VIEWS[v][merge_ix](
+                spark.read.schema(spool_schemas[v]).parquet(spools[v])
+            )
             for v in view_names
         }
     track_scratch_dir(root)

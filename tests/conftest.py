@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -18,3 +20,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``with jobs_launched() as ids:`` collects the ids of the Spark
+    jobs the calling thread launches inside the block (a unique job
+    group, read back through statusTracker)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def block():
+        group = f"jobs-launched-{uuid.uuid4().hex[:8]}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return block

@@ -89,6 +89,28 @@ def test_shared_drain_multibatch_merge(spark, sf_dir, tmp_path):
     assert got["stream_session_window"] == _rows(session_agg(ev))
 
 
+def test_spool_read_needs_no_inference(spark, sf_dir, jobs_launched):
+    """The merge reads each spool with the schema recorded when the
+    partial was written: it equals what inference reads back, and
+    building the merge frames launches no Spark job from the calling
+    thread (the stream's own jobs run on the stream thread)."""
+    from master_airflow_spark import registry
+    from master_airflow_spark.streaming.events import landing_dir_for, read_events_stream
+    from master_airflow_spark.streaming.shared_drain import VIEWS, _spool_schema
+
+    drain_events_multi(spark, sf_dir, VIEW_NAMES)
+    registry.release_caches()
+    with jobs_launched() as jobs:
+        shared = drain_events_multi(spark, sf_dir, VIEW_NAMES)
+    stream = read_events_stream(
+        spark, landing_dir_for(os.path.join(sf_dir, "events.parquet"))
+    )
+    for v in VIEW_NAMES:
+        spool = os.path.dirname(shared[v].inputFiles()[0])
+        assert _spool_schema(VIEWS[v][0](stream)) == spark.read.parquet(spool).schema
+    registry.release_caches()
+    assert jobs == []
+
 
 def test_multibatch_equals_per_query_drains_time_split(spark, sf_dir, tmp_path):
     """Multi-batch equality against the per-query STREAMING drains
