@@ -1,37 +1,5 @@
-"""Operator modules. Importing this package registers every named query
-(and its DuckDB oracle) into master_airflow_spark.registry."""
-
-from master_airflow_spark.operators import (  # noqa: F401
-    attribution,
-    bloom_prune,
-    bpe,
-    clusters,
-    corpus_quality,
-    dedup,
-    embeddings,
-    graph,
-    ingest,
-    layout,
-    multimodal,
-    outer_joins,
-    quality,
-    robust_stats,
-    sampling,
-    relational,
-    retrieval,
-    scalar,
-    scalarfns,
-    scrub,
-    similarity,
-    sketches,
-    skew,
-    sql_api,
-    stats,
-    streaming_queries,
-    subqueries,
-    text,
-    topk,
-    tpch_like,
-    udfs,
-    window,
-)
+"""Operator modules. ``registry._ensure_loaded()`` imports every one of
+them, which registers each named query (and its DuckDB oracle) into
+master_airflow_spark.registry. The package itself imports nothing, so a
+Python worker that unpickles one module's kernel loads that module
+alone."""

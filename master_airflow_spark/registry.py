@@ -21,6 +21,7 @@ always carry a total ordering (explicit tiebreaker keys).
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -252,12 +253,49 @@ def release_caches() -> None:
 
 _loaded = False
 
+# Import order is registration order, i.e. the order of REGISTRY (and of
+# queries() after PRIORITY).
+_OPERATOR_MODULES = (
+    "attribution",
+    "bloom_prune",
+    "bpe",
+    "clusters",
+    "corpus_quality",
+    "dedup",
+    "embeddings",
+    "graph",
+    "ingest",
+    "layout",
+    "multimodal",
+    "outer_joins",
+    "quality",
+    "robust_stats",
+    "sampling",
+    "relational",
+    "retrieval",
+    "scalar",
+    "scalarfns",
+    "scrub",
+    "similarity",
+    "sketches",
+    "skew",
+    "sql_api",
+    "stats",
+    "streaming_queries",
+    "subqueries",
+    "text",
+    "topk",
+    "tpch_like",
+    "udfs",
+    "window",
+)
+
 
 def _ensure_loaded() -> None:
     """Import every operator module so decorators run."""
     global _loaded
     if _loaded:
         return
-    from master_airflow_spark import operators  # noqa: F401  (imports all submodules)
-
+    for mod in _OPERATOR_MODULES:
+        importlib.import_module(f"master_airflow_spark.operators.{mod}")
     _loaded = True

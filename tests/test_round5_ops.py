@@ -133,8 +133,9 @@ def test_stream_unique_users_matches_batch_distinct(spark, sf_dir):
     """The streaming pre-agg + batch rollup recast must equal the
     direct batch count(DISTINCT user_id) per hour."""
     from master_airflow_spark.catalog import load_table
-    from master_airflow_spark.registry import REGISTRY
+    from master_airflow_spark.registry import REGISTRY, _ensure_loaded
 
+    _ensure_loaded()
     got = {
         r.window_start: r.n_users
         for r in REGISTRY["stream_unique_users_rollup"].fn(spark, sf_dir).collect()
