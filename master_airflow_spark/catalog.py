@@ -8,6 +8,11 @@ exposed uniformly as DataFrames / temp views. Reads go through
 ``spark.read.schema(...).parquet``, which launches none. Catalyst
 still gets predicate pushdown, column pruning, and (on partitioned
 layouts) partition pruning for free.
+
+Sizes have one source too: ``relation_bytes(df)`` reads Catalyst's
+estimate off a loaded frame, and every plan-choosing size gate uses
+it. The driver-side ``parquet_part_stats`` walker is only a file
+identity (cache keys), never a size for a plan choice.
 """
 
 from __future__ import annotations
@@ -32,12 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# engine targets (region/nation are fixed-cardinality; supplier/part
-# grow with SF but stay broadcastable well past sf1 at default 10 MB
-# autoBroadcastJoinThreshold — Catalyst sizes them from parquet stats).
-BROADCAST_DIMS = ("region", "nation", "supplier", "part")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -52,10 +51,10 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
     never reads (``_temporary``, ``.spark-staging`` and every other
     ``_``/``.`` prefix) are skipped. Empty list if the path is missing.
     The ONE walker behind every cheap table fingerprint in the repo
-    (near-dup probe cache invalidation, size-adaptive state
-    partitioning, scale-probe staging markers, the read_parquet schema
-    cache), the size gates (table_bytes) and the footer-schema probe
-    (_nanos_timestamp_cols), so a future change lands once.
+    (near-dup probe cache invalidation, scale-probe staging markers,
+    the read_parquet schema cache) and the footer-schema probe
+    (_nanos_timestamp_cols), so a future change lands once. Size
+    gates do not read it: they take relation_bytes.
 
     st_ino is folded in (round-11 ADVICE) so a corpus replaced by a
     timestamp-preserving copy (cp -p / rsync -t, same names and sizes)
@@ -81,15 +80,16 @@ def parquet_part_stats(path: str) -> list[tuple[str, int, int, int]]:
         return []
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """Total on-disk parquet bytes of a table — single file OR a
-    directory of part files (summed via parquet_part_stats, the one
-    walker). Size gates MUST use this instead of os.path.getsize: on
-    a directory-layout table (any Spark-written output, e.g. the
-    scale-probe replicas) getsize returns the directory inode's size
-    (~4-16 KB), which would silently hold a "small side" broadcast
-    hint open at any data volume."""
-    return sum(s[2] for s in parquet_part_stats(table_path(sf_dir, name)))
+def relation_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s analyzed plan — the number
+    Spark's own broadcast choice reads. The plan-choosing size gates
+    read this, so they see every layout and URI Spark reads (Hive
+    partitions, ``file://``, object stores). A relation Catalyst cannot
+    size (e.g. RDD-backed) reports spark.sql.defaultSizeInBytes
+    (Long.MaxValue), which fails every ``< bound`` gate: unknown sizes
+    close the hints. Read it off the frame as loaded: a Project's
+    estimate scales with its row width."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:

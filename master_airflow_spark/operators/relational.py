@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from master_airflow_spark.catalog import load_table, table_bytes
+from master_airflow_spark.catalog import load_table, relation_bytes
 from master_airflow_spark.functions.exact import (
     cents,
     dsum,
@@ -36,13 +36,15 @@ from master_airflow_spark.functions.exact import (
 )
 from master_airflow_spark.registry import register
 
-# revenue_by_nation's fact-probe broadcast gate: hint the pruned
-# (orders ⋈ customer-keys) build side only while the orders parquet is
-# under this bound (file metadata — no job). Past it the hint drops and
-# the bushy join tree shuffles both fact legs, the only plan that
-# works at 100 TB. 64 MB of orders parquet ≈ well under a 10 MB hashed
-# relation after the region prune + 2-column projection.
-_RBN_BROADCAST_ORDERS_BYTES = 64 << 20
+# Fact-probe broadcast gate of revenue_by_nation and q5 (tpch_like):
+# hint the pruned (orders ⋈ customer-keys) build side only while the
+# orders relation is under this bound (catalog.relation_bytes —
+# Catalyst's size, no job). Past it, or when the size is unknown, the
+# hint drops and the bushy join tree shuffles both fact legs, the
+# only plan that works at 100 TB. 64 MB of orders parquet ≈ well
+# under a 10 MB hashed relation after the region prune + 2-column
+# projection.
+FACT_BROADCAST_ORDERS_BYTES = 64 << 20
 
 _QTY_C = sql_cents("l_quantity")
 _PRICE_C = sql_cents("l_extendedprice")
@@ -121,15 +123,18 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-name nations would still aggregate exactly as before
     (partial sums are guarded longs; integer addition associative —
     bit-identical, collect-compared and oracle-verified at three SFs).
-    The o2 broadcast hint is SIZE-GATED on the orders parquet bytes
-    (metadata only, no extra job): past _RBN_BROADCAST_ORDERS_BYTES
-    the hint drops and the bushy tree runs the same two fact shuffles
-    (o⋈c2 on custkey — region-pruned, orders-cardinality — then li⋈o2
-    on orderkey) as the old chain, so the 100 TB shape is unchanged.
+    The o2 broadcast hint is SIZE-GATED on Catalyst's size of the
+    orders relation (catalog.relation_bytes, no extra job): past
+    FACT_BROADCAST_ORDERS_BYTES, or unknown, the hint drops and the
+    bushy tree runs the same two fact shuffles (o⋈c2 on custkey —
+    region-pruned, orders-cardinality — then li⋈o2 on orderkey) as
+    the old chain, so the 100 TB shape is unchanged.
     Interleaved prepared-plan A/B at sf0.1: 0.753→0.567 s min-of-8,
     new side won 7/8 pairs."""
     customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = load_table(spark, sf_dir, "orders")
+    orders_bytes = relation_bytes(orders)
+    orders = orders.select("o_orderkey", "o_custkey")
     lineitem = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         (cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))).alias("rev"),
@@ -149,7 +154,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o2 = orders.join(c2, orders.o_custkey == c2.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if table_bytes(sf_dir, "orders") < _RBN_BROADCAST_ORDERS_BYTES:
+    if orders_bytes < FACT_BROADCAST_ORDERS_BYTES:
         o2 = F.broadcast(o2)
     keyed = (
         lineitem.join(o2, lineitem.l_orderkey == o2.o_orderkey)

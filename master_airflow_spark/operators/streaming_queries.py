@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from master_airflow_spark.catalog import load_table, relation_bytes
 from master_airflow_spark.functions.exact import sql_cents, sql_dsum, sql_lsum_money
 from master_airflow_spark.registry import register
 from master_airflow_spark.streaming.events import (
@@ -36,19 +37,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_bytes(sf_dir: str) -> int:
-    """Driver-side (os.stat, no Spark job) byte size of the events
-    table — the cheap signal the size-adaptive state-partition picks
-    key on (catalog.parquet_part_stats — the shared walker)."""
-    from master_airflow_spark.catalog import parquet_part_stats
-
-    return sum(
-        st[2]  # (name, mtime_ns, size, ino)
-        for st in parquet_part_stats(os.path.join(sf_dir, "events.parquet"))
-    )
-
-
-def _session_state_partitions(sf_dir: str) -> int:
+def _session_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Size-adaptive state-partition count for the session drain.
     Session state is per-SESSION (≈ per event on sparse data), so the
     addBatch fold is the dominant trigger cost and parallelism pays —
@@ -56,10 +45,13 @@ def _session_state_partitions(sf_dir: str) -> int:
     files per trigger, so small drains want few partitions. Measured
     sweet spots: 8 at sf0.1 (2MB events; 4/8/16 → 0.91/0.82/0.92s
     per trigger) and 16 at the x50 replica (78MB; 8/16/32 → trigger
-    medians 13.2/9.1/14.1s — round-11 sweep). Threshold at 16MB,
-    between the two regimes; a long-lived cluster deployment sizes to
-    key cardinality instead (see run_to_memory)."""
-    return 16 if _events_bytes(sf_dir) > (16 << 20) else 8
+    medians 13.2/9.1/14.1s — round-11 sweep). Threshold at 16MB of
+    events, read as Catalyst's size of the events relation
+    (catalog.relation_bytes, no job), between the two regimes; a
+    long-lived cluster deployment sizes to key cardinality instead
+    (see run_to_memory)."""
+    events = load_table(spark, sf_dir, "events")
+    return 16 if relation_bytes(events) > (16 << 20) else 8
 
 
 @register(
@@ -208,7 +200,7 @@ def stream_session_window_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(
         session_agg(_events_stream(spark, sf_dir)),
         "complete",
-        state_partitions=_session_state_partitions(sf_dir),
+        state_partitions=_session_state_partitions(spark, sf_dir),
     )
 
 

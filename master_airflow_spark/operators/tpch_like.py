@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from master_airflow_spark.catalog import load_table, table_bytes
+from master_airflow_spark.catalog import load_table, relation_bytes
 from master_airflow_spark.functions.exact import (
     cents,
     lavg_money,
@@ -26,21 +26,16 @@ from master_airflow_spark.functions.exact import (
     sql_cents,
     sql_lsum_money,
 )
+from master_airflow_spark.operators.relational import FACT_BROADCAST_ORDERS_BYTES
 from master_airflow_spark.registry import register
 
 # revenue term price*(1-disc) in exact scaled-long form (scale 100^2)
 _REV_C = f"{sql_cents('l_extendedprice')} * (100 - {sql_cents('l_discount')})"
 
-# Fact-probe broadcast gate (q5, r16): hint the pruned
-# (orders ⋈ customer-keys) build side only while the orders parquet is
-# under this bound (file metadata, no job). Past it the hint drops and
-# the bushy tree shuffles both fact legs — the 100 TB plan. Matches
-# relational._RBN_BROADCAST_ORDERS_BYTES.
-_FACT_BROADCAST_ORDERS_BYTES = 64 << 20
-
 # q18 mid-scale band (r16): broadcast-hint the HAVING-filtered order
 # aggregate — whose ~1.5% selectivity Catalyst/AQE cannot see — only
-# while MIN <= orders bytes < MAX, i.e. in [16 MB, 256 MB): above the
+# while MIN <= relation_bytes(orders) < MAX, i.e. in [16 MB, 256 MB)
+# (an unknown size reads Long.MaxValue, past the band): above the
 # 10 MB autoBroadcastJoinThreshold under which Catalyst broadcasts the
 # orders side itself, and below the size where the aggregate's
 # WORST-case cardinality is no longer a safe broadcast relation. In
@@ -466,13 +461,17 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (re-merged by name, so duplicate-name nations still
     aggregate identically; guarded-long partials merged by the same
     lsum_money — bit-identical, collect-compared + oracle-verified at
-    three SFs). The o2 broadcast hint is size-gated on the orders
-    parquet bytes (no extra job); past the gate both fact legs
-    shuffle exactly as the r15 shape did. Interleaved prepared-plan
-    A/B at sf0.1, two draws: min 0.965→0.771 / 0.841→0.680 (−20%),
-    med −8%/−15%, B won 11/18 pairs."""
+    three SFs). The o2 broadcast hint is size-gated on Catalyst's size
+    of the orders relation (catalog.relation_bytes, no extra job;
+    relational.FACT_BROADCAST_ORDERS_BYTES); past the gate, or when
+    the size is unknown, both fact legs shuffle exactly as the r15
+    shape did. Interleaved prepared-plan A/B at sf0.1, two draws: min
+    0.965→0.771 / 0.841→0.680 (−20%), med −8%/−15%, B won 11/18
+    pairs."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load_table(spark, sf_dir, "orders").where(
+    o = load_table(spark, sf_dir, "orders")
+    orders_bytes = relation_bytes(o)
+    o = o.where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
@@ -491,7 +490,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey"
     )
     o2 = o.join(c2, o.o_custkey == c2.c_custkey).select("o_orderkey", "c_nationkey")
-    if table_bytes(sf_dir, "orders") < _FACT_BROADCAST_ORDERS_BYTES:
+    if orders_bytes < FACT_BROADCAST_ORDERS_BYTES:
         o2 = F.broadcast(o2)
     keyed = (
         li.join(o2, li.l_orderkey == o2.o_orderkey)
@@ -630,10 +629,11 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     of orders (aggregate+filter defeats size estimation, and AQE's
     runtime stats measure the agg exchange's INPUT, pre-final-agg/
     filter), so past the orders auto-broadcast size both fact sides
-    shuffle. Inside the half-open [16 MB, 256 MB) orders-bytes band
-    the filtered aggregate gets an explicit broadcast hint instead:
-    orders never shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%,
-    plan SMJ + orders Exchange → BHJ with the agg as build). The band
+    shuffle. Inside the half-open [16 MB, 256 MB) band of Catalyst's
+    orders size (catalog.relation_bytes, no extra job) the filtered
+    aggregate gets an explicit broadcast hint instead: orders never
+    shuffles (x50 measured: 2.01 → 1.52 s min-of-5, −25%, plan SMJ +
+    orders Exchange → BHJ with the agg as build). The band
     is bounded both ways, measured at sf0.1 and x50:
     - below the 10 MB autoBroadcastJoinThreshold Catalyst broadcasts
       the orders side itself and the hint would SERIALIZE the heavy
@@ -664,7 +664,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if (
         _Q18_AGG_BROADCAST_MIN_ORDERS
-        <= table_bytes(sf_dir, "orders")
+        <= relation_bytes(o)
         < _Q18_AGG_BROADCAST_MAX_ORDERS
     ):
         agg = F.broadcast(agg)

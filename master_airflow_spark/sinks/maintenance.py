@@ -17,6 +17,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from master_airflow_spark.catalog import relation_bytes
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # the maxPartitionBytes-friendly size
 
 
@@ -27,16 +29,15 @@ def compact_parquet(
     sort_by: list[str] | None = None,
 ) -> dict[str, int]:
     """Rewrite `path` into ceil(total_bytes / target) files, optionally
-    range-clustered by sort_by. Write-then-swap: the rewrite lands in a
-    sibling temp dir and replaces the original only on success.
-    Returns {files_before, files_after}."""
+    range-clustered by sort_by, where total_bytes is Catalyst's size of
+    the table (catalog.relation_bytes). Write-then-swap: the rewrite
+    lands in a sibling temp dir and replaces the original only on
+    success. Returns {files_before, files_after}."""
     before = [
         f for f in os.listdir(path) if f.endswith(".parquet") or f.startswith("part-")
     ]
-    total = sum(os.path.getsize(os.path.join(path, f)) for f in before)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-
     df = spark.read.parquet(path)
+    n_files = max(1, math.ceil(relation_bytes(df) / target_file_bytes))
     if sort_by:
         df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
     else:

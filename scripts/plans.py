@@ -16,6 +16,11 @@ import sys
 
 sys.path.insert(0, ".")
 
+# stream_session_window's plan reads the shared drain's spool, whose
+# directory carries a random run id; a fixed placeholder keeps dumps
+# of one plan byte-identical across runs.
+_SPOOL_RUN = re.compile(r"mas_shared_drain/[0-9a-f]{10}/")
+
 
 def main() -> int:
     if len(sys.argv) < 3:
@@ -40,7 +45,7 @@ def main() -> int:
     for name in names or [n for n in bench.HEADLINE if n in registry.REGISTRY]:
         try:
             df = registry.REGISTRY[name].fn(spark, sf_dir)
-            plan = formatted(df)
+            plan = _SPOOL_RUN.sub("mas_shared_drain/<run>/", formatted(df))
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: PLAN FAILED {type(ex).__name__}: {ex}", flush=True)
             registry.release_caches()

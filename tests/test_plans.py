@@ -5,6 +5,8 @@ results, catastrophic at scale."""
 
 from __future__ import annotations
 
+import pytest
+
 from master_airflow_spark.plans.explain import (
     formatted,
     has_operator,
@@ -688,6 +690,56 @@ def test_q7_fact_exchange_carries_cents_and_year_not_raw(spark, sf_dir):
     assert "AS rev#" in plan and "AS ship_year#" in plan, plan
 
 
+@pytest.mark.parametrize(
+    "module,name",
+    [
+        ("relational", "revenue_by_nation"),
+        ("tpch_like", "q5_local_supplier_volume"),
+    ],
+)
+def test_fact_probe_gate_broadcasts_o2_below_bound_only(
+    spark, sf_dir, monkeypatch, module, name
+):
+    """rbn/q5 (r16): the pruned o2 = (orders ⋈ customer-keys) leg is
+    broadcast-hinted only while Catalyst's orders size is under
+    FACT_BROADCAST_ORDERS_BYTES (64 MB). Auto-broadcast is off, so
+    only the hint can broadcast o2. At the test SF o2 sits under a
+    BroadcastExchange and the fact legs never shuffle on the order
+    key; with an orders size past the bound (or unknown) the hint is
+    gone and the l_orderkey / o_orderkey shuffle appears. The pin
+    fails if the hint is deleted or the gate forced open."""
+    import importlib
+    import re
+
+    mod = importlib.import_module(f"master_airflow_spark.operators.{module}")
+
+    def plan_at(orders_bytes=None):
+        if orders_bytes is not None:
+            monkeypatch.setattr(mod, "relation_bytes", lambda df: orders_bytes)
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return formatted(_q(spark, sf_dir, name))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    def o2_broadcast(plan):
+        inputs = re.findall(
+            r"^\(\d+\) BroadcastExchange\nInput \[\d+\]: \[(.*)\]", plan, re.M
+        )
+        return any("o_orderkey#" in i and "c_nationkey#" in i for i in inputs)
+
+    small = plan_at()
+    assert o2_broadcast(small), small
+    assert "hashpartitioning(l_orderkey" not in small, small
+    assert "hashpartitioning(o_orderkey" not in small, small
+
+    big = plan_at(1 << 40)
+    assert not o2_broadcast(big), big
+    assert "hashpartitioning(l_orderkey" in big, big
+    assert "hashpartitioning(o_orderkey" in big, big
+
+
 def test_q18_band_gated_agg_broadcast(spark, sf_dir, monkeypatch):
     """q18 (r16 §3.1): inside the [16 MB, 256 MB) orders-bytes band the
     HAVING-filtered aggregate carries an explicit broadcast hint (its
@@ -703,7 +755,7 @@ def test_q18_band_gated_agg_broadcast(spark, sf_dir, monkeypatch):
     import master_airflow_spark.operators.tpch_like as t
 
     def plan_at(orders_bytes):
-        monkeypatch.setattr(t, "table_bytes", lambda d, n: orders_bytes)
+        monkeypatch.setattr(t, "relation_bytes", lambda df: orders_bytes)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
